@@ -300,7 +300,6 @@ def main() -> None:
             spark.read.format("solana_rpc")
             .option("start_slot", 0)
             .option("end_slot", 0)
-            .option("mode", "offline")
             .load()
             .count()
         )

@@ -104,15 +104,19 @@ def run(args: Args) -> dict:
 
     spark = get_spark("block-data-fetcher-spark")
     spark.dataSource.register(SolanaRpcDataSource)
-    mode = "rpc" if args.rpc_url else "offline"
+    # offline exactly when there is no URL
+    source = {
+        "url": args.rpc_url or "",
+        "max_retries": args.max_retries,
+        "retry_delay": args.retry_delay,
+    }
 
     if args.continuous:
         # the intent of the reference's stubbed loop, done properly
         stream = (
             spark.readStream.format("solana_rpc")
+            .options(**source)
             .option("start_slot", args.start_slot or 0)
-            .option("mode", mode)
-            .option("url", args.rpc_url or "")
             .option("max_slots_per_trigger", args.batch_size)
             .load()
         )
@@ -131,29 +135,33 @@ def run(args: Args) -> dict:
 
     start = args.start_slot if args.start_slot is not None else 0
     end = args.calculate_end_slot(start)
+    # cached: both tables read it, and each block is fetched once
     raw = (
         spark.read.format("solana_rpc")
+        .options(**source)
         .option("start_slot", start)
         .option("end_slot", end)
         .option("batch_size", args.batch_size)
-        .option("mode", mode)
-        .option("url", args.rpc_url or "")
         .load()
+        .persist()
     )
-    blocks = parse_blocks(raw).withColumn("processed_at", F.current_timestamp())
-    txs = extract_transactions(raw).withColumn(
-        "processed_at", F.current_timestamp()
-    )
-    n_blocks = upsert_parquet(
-        spark, blocks, f"{args.output}/blocks", ["slot"], ["processed_at"]
-    )
-    n_txs = upsert_parquet(
-        spark,
-        txs,
-        f"{args.output}/transactions",
-        ["signature"],
-        ["processed_at"],
-    )
+    try:
+        blocks = parse_blocks(raw).withColumn("processed_at", F.current_timestamp())
+        txs = extract_transactions(raw).withColumn(
+            "processed_at", F.current_timestamp()
+        )
+        n_blocks = upsert_parquet(
+            spark, blocks, f"{args.output}/blocks", ["slot"], ["processed_at"]
+        )
+        n_txs = upsert_parquet(
+            spark,
+            txs,
+            f"{args.output}/transactions",
+            ["signature"],
+            ["processed_at"],
+        )
+    finally:
+        raw.unpersist()
     stats = extraction_stats(spark.read.parquet(f"{args.output}/transactions")).head()
     report = {
         "blocks_loaded": n_blocks,

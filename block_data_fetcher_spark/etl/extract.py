@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .parsers import first_transfer_details
 from .schema import BLOCK_JSON_SCHEMA, TX_JSON_SCHEMA
-from .transform import classify_transaction, label_transaction
+from .transform import classify_transaction, label_transaction, name_map
 
 
 def normalize_account_keys(keys: Column) -> Column:
@@ -38,19 +38,21 @@ def normalize_account_keys(keys: Column) -> Column:
     )
 
 
-def extract_program_ids(instructions: Column, account_keys: Column) -> Column:
-    """Per-instruction program id with first-seen-order dedup
-    (reference extract.rs:116-163): coalesce(programId, program,
-    accountKeys[programIdIndex]); array_distinct preserves first
-    occurrence (the reference's O(n²) contains-loop, hash-based)."""
-    per_instr = F.transform(
-        instructions,
-        lambda i: F.coalesce(
-            i["programId"],
-            i["program"],
-            F.try_element_at(account_keys, i["programIdIndex"] + 1),
-        ),
+def _program_id(instr: Column, account_keys: Column) -> Column:
+    """An instruction's program id (reference extract.rs:116-163):
+    coalesce(programId, program, accountKeys[programIdIndex])."""
+    return F.coalesce(
+        instr["programId"],
+        instr["program"],
+        F.try_element_at(account_keys, instr["programIdIndex"] + 1),
     )
+
+
+def extract_program_ids(instructions: Column, account_keys: Column) -> Column:
+    """Per-instruction program ids with first-seen-order dedup:
+    array_distinct preserves first occurrence (the reference's O(n²)
+    contains-loop, hash-based)."""
+    per_instr = F.transform(instructions, lambda i: _program_id(i, account_keys))
     return F.array_distinct(F.filter(per_instr, lambda p: p.isNotNull()))
 
 
@@ -68,14 +70,28 @@ def parse_blocks(raw_blocks: DataFrame) -> DataFrame:
     ).where(F.col("blockhash").isNotNull())
 
 
-def flatten_transactions(raw_blocks: DataFrame) -> DataFrame:
-    """(slot, raw) → one row per transaction with its in-block index
-    (reference P1, extract.rs:55-71): posexplode keeps
-    transaction_index; unparseable txs are skipped (ST5)."""
+def _transactions(raw_blocks: DataFrame) -> DataFrame:
+    """(slot, raw) → one row per transaction (reference P1,
+    extract.rs:55-71): ``block_slot``, ``transaction_index`` (posexplode
+    keeps the in-block index), the parsed ``tx`` struct, its first
+    ``signature`` and its normalized ``account_keys``. An unparseable
+    tx has a NULL signature; callers drop it (ST5)."""
     b = F.from_json("raw", BLOCK_JSON_SCHEMA)
-    return raw_blocks.select(
+    flat = raw_blocks.select(
         F.col("slot").cast("long").alias("block_slot"),
         F.posexplode(b["transactions"]).alias("transaction_index", "tx_raw"),
+    )
+    parsed = flat.select(
+        "block_slot",
+        "transaction_index",
+        F.from_json("tx_raw", TX_JSON_SCHEMA).alias("tx"),
+    )
+    return parsed.select(
+        "block_slot",
+        "transaction_index",
+        "tx",
+        F.try_element_at(F.col("tx.signatures"), F.lit(1)).alias("signature"),
+        normalize_account_keys(F.col("tx.message.accountKeys")).alias("account_keys"),
     )
 
 
@@ -83,25 +99,22 @@ def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
     """The full tx-level extraction (reference extract.rs:74-163 +
     enrichment transform.rs:252-335): fields, classification, label,
     first transfer details."""
-    flat = flatten_transactions(raw_blocks)
-    tx = F.from_json("tx_raw", TX_JSON_SCHEMA)
-    with_tx = flat.select("block_slot", "transaction_index", tx.alias("tx"))
-
-    keys = normalize_account_keys(F.col("tx.message.accountKeys"))
+    keys = F.col("account_keys")
     instrs = F.col("tx.message.instructions")
     pids = extract_program_ids(instrs, keys)
+    ttype = classify_transaction(pids)
     details = first_transfer_details(instrs)
 
-    out = with_tx.select(
-        F.try_element_at(F.col("tx.signatures"), F.lit(1)).alias("signature"),
+    out = _transactions(raw_blocks).select(
+        "signature",
         "block_slot",
         "transaction_index",
         # success = meta.err IS NULL (extract.rs:79)
         F.col("tx.meta.err").isNull().alias("success"),
         F.coalesce(F.col("tx.meta.fee"), F.lit(0)).alias("fee"),
         pids.alias("program_ids"),
-        classify_transaction(pids).alias("transaction_type"),
-        label_transaction(pids).alias("transaction_label"),
+        ttype.alias("transaction_type"),
+        label_transaction(pids, ttype).alias("transaction_label"),
         F.try_element_at(keys, F.lit(1)).alias("signer"),
         F.size(F.col("tx.message.accountKeys")).cast("int").alias("num_accounts"),
         F.size(instrs).cast("int").alias("num_instructions"),
@@ -117,22 +130,12 @@ def extract_transactions(raw_blocks: DataFrame) -> DataFrame:
 def extract_instructions(raw_blocks: DataFrame) -> DataFrame:
     """tx → one row per instruction (reference models.rs:36-43;
     instructions explode to their own table, SURVEY §1.1)."""
-    flat = flatten_transactions(raw_blocks)
-    tx = F.from_json("tx_raw", TX_JSON_SCHEMA)
-    with_tx = flat.select("block_slot", "transaction_index", tx.alias("tx"))
-    keys = normalize_account_keys(F.col("tx.message.accountKeys"))
-    exploded = with_tx.select(
-        F.try_element_at(F.col("tx.signatures"), F.lit(1)).alias("transaction_signature"),
-        keys.alias("account_keys"),
+    exploded = _transactions(raw_blocks).select(
+        F.col("signature").alias("transaction_signature"),
+        "account_keys",
         F.posexplode(F.col("tx.message.instructions")).alias("instruction_index", "instr"),
     )
-    pid = F.coalesce(
-        F.col("instr.programId"),
-        F.col("instr.program"),
-        F.try_element_at(F.col("account_keys"), F.col("instr.programIdIndex") + 1),
-    )
-    from .transform import name_map
-
+    pid = _program_id(F.col("instr"), F.col("account_keys"))
     return exploded.select(
         "transaction_signature",
         "instruction_index",
@@ -159,12 +162,9 @@ def account_activity(raw_blocks: DataFrame) -> DataFrame:
     Scale: explode is a generator in the scan stage; the rollup is one
     hash aggregate on address with map-side partials — state is
     O(|addresses|), the same bound as the reference's table."""
-    flat = flatten_transactions(raw_blocks)
-    tx = F.from_json("tx_raw", TX_JSON_SCHEMA)
-    keys = normalize_account_keys(tx["message"]["accountKeys"])
-    exploded = flat.select(
+    exploded = _transactions(raw_blocks).select(
         "block_slot",
-        F.posexplode(keys).alias("key_index", "address"),
+        F.posexplode("account_keys").alias("key_index", "address"),
     ).where(F.col("address").isNotNull())
     return exploded.groupBy("address").agg(
         F.min("block_slot").alias("first_seen_slot"),
@@ -172,27 +172,6 @@ def account_activity(raw_blocks: DataFrame) -> DataFrame:
         F.count("*").alias("transaction_count"),
         F.count_if(F.col("key_index") == 0).alias("as_signer_count"),
     )
-
-
-def observed_transactions(raw_blocks: DataFrame):
-    """Attach in-flight pipeline metrics to the tx extraction — the
-    reference's progress/stats counters (A5, ``extract.rs:224-239`` /
-    ``pipeline.rs:30-54``) restated as ``df.observe()``: metrics ride
-    the job that already runs (no second pass over the data), collected
-    on the driver after any action.
-
-    Returns ``(transactions_df, Observation)``; after an action on the
-    DataFrame, ``observation.get`` yields the counters."""
-    from pyspark.sql import Observation
-
-    obs = Observation("extraction_stats")
-    txs = extract_transactions(raw_blocks).observe(
-        obs,
-        F.count(F.lit(1)).alias("total_transactions"),
-        F.count_if(F.col("success")).alias("successful_transactions"),
-        F.sum("fee").alias("total_fees"),
-    )
-    return txs, obs
 
 
 def extraction_stats(transactions: DataFrame) -> DataFrame:

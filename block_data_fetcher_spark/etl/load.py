@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,20 +28,30 @@ from pyspark.sql import functions as F
 from ..operators.windows import last_wins
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
+def _exists(path: str) -> bool:
     return os.path.exists(path) and any(
         f.endswith(".parquet") for f in os.listdir(path)
     )
+
+
+def _restore(path: str) -> None:
+    """Undo a swap cut between its two renames: the live table is only
+    at `path.old`, so move it back before the next commit reads `path`
+    (the batch whose copy was left in its temp dir never committed)."""
+    old = path + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.replace(old, path)
 
 
 def _atomic_swap(path: str, tmp: str) -> None:
     """Crash-safe directory swap: rename the live table ASIDE first
     (`path` -> `path.old`), move `tmp` into place, then delete the
     aside copy. A crash at any point leaves either the old table at
-    `path` or at `path.old` plus the complete new one at `tmp` — never
-    a window with NO copy, which the naive rmtree-then-replace had.
-    (On a real object store this is the same two-phase commit a
-    Delta/Iceberg snapshot swap gives you for free.)"""
+    `path` or at `path.old` (which :func:`_restore` moves back) plus
+    the complete new one at `tmp` — never a window with NO copy, which
+    the naive rmtree-then-replace had. (On a real object store this is
+    the same two-phase commit a Delta/Iceberg snapshot swap gives you
+    for free.)"""
     old = path + ".old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(path):
@@ -60,6 +71,39 @@ def _read_batch_marker(path: str) -> int | None:
     return None
 
 
+def commit_table(
+    spark: SparkSession,
+    path: str,
+    build: Callable[[DataFrame | None], DataFrame],
+    batch_id: int | None = None,
+) -> int:
+    """The one table commit every sink shares (the batch-atomicity
+    analog of load.rs:161-287): restore an interrupted swap, hand the
+    stored table (None when there is none) to `build`, write its
+    result to a temp dir beside `path`, count it, then swap it in.
+    Readers see the old or the new table, never a partial one; a
+    failed write leaves the table as it was and removes the temp dir.
+    A `batch_id` is persisted in the ``_last_batch_id`` marker inside
+    the temp dir, so it commits in the same rename as the data.
+    Returns the committed row count."""
+    _restore(path)
+    out = build(spark.read.parquet(path) if _exists(path) else None)
+    parent = os.path.dirname(path) or "."
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="commit_", dir=parent)
+    try:
+        out.write.mode("overwrite").parquet(tmp)
+        n = spark.read.parquet(tmp).count()
+        if batch_id is not None:
+            with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
+                fh.write(str(batch_id))
+        _atomic_swap(path, tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return n
+
+
 def upsert_parquet(
     spark: SparkSession,
     incoming: DataFrame,
@@ -70,23 +114,16 @@ def upsert_parquet(
     """UPSERT-by-key into a parquet table (reference S6/S7). `order`
     columns break ties DESC — incoming rows must carry a version column
     (e.g. `processed_at`, `ts`) so newest wins deterministically.
-
-    Returns the post-upsert row count. The write is
-    write-temp-then-swap: readers see the old or the new table, never
-    a partial one (the batch-atomicity analog of load.rs:161-287)."""
-    if _exists(spark, path):
-        existing = spark.read.parquet(path)
-        merged = existing.unionByName(incoming)
-    else:
-        merged = incoming
-    deduped = last_wins(merged, keys, order)
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="upsert_", dir=os.path.dirname(path) or ".")
-    deduped.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    _atomic_swap(path, tmp)
-    return n
+    Returns the post-upsert row count."""
+    return commit_table(
+        spark,
+        path,
+        lambda existing: last_wins(
+            incoming if existing is None else existing.unionByName(incoming),
+            keys,
+            order,
+        ),
+    )
 
 
 def merge_aggregate(
@@ -99,41 +136,31 @@ def merge_aggregate(
     """Algebraic aggregate maintenance: merge a batch's per-key
     PARTIAL aggregates (columns besides `keys` must be sum-mergeable —
     counts and sums, the algebraic class) into the stored aggregate
-    table by key-wise addition, write-temp-then-swap.
+    table by key-wise addition.
 
     This is the incremental-materialized-view half of the sink family:
     `upsert_parquet` keeps the newest ROW per key; this keeps the
     running AGGREGATE per key, so a replayed batch is NOT idempotent
     by itself. foreachBatch delivery is AT-LEAST-once (a crash after
     the table swap but before the checkpoint commit replays the
-    batch), so callers pass Spark's ``batch_id`` and the last merged
-    id is persisted in a ``_last_batch_id`` marker INSIDE the table
-    directory — written into the temp dir BEFORE the swap, so the
-    merge and its marker commit in the same atomic rename. A replayed
-    ``batch_id <= stored`` is skipped: the standard foreachBatch
-    idempotence pattern. At 100 TB the stored side is |keys| rows,
-    not |events| — the merge cost is bounded by key cardinality."""
-    if batch_id is not None and os.path.exists(path):
+    batch), so callers pass Spark's ``batch_id`` and :func:`commit_table`
+    persists it in the table's ``_last_batch_id`` marker, atomically
+    with the merge. A replayed ``batch_id <= stored`` is skipped: the
+    standard foreachBatch idempotence pattern. At 100 TB the stored
+    side is |keys| rows, not |events| — the merge cost is bounded by
+    key cardinality."""
+    if batch_id is not None:
+        _restore(path)
         stored = _read_batch_marker(path)
         if stored is not None and batch_id <= stored:
             return spark.read.parquet(path).count()
-    if _exists(spark, path):
-        merged = spark.read.parquet(path).unionByName(partials)
-    else:
-        merged = partials
     value_cols = [c for c in partials.columns if c not in keys]
-    rolled = merged.groupBy(*keys).agg(
-        *[F.sum(c).alias(c) for c in value_cols]
-    )
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="mergeagg_", dir=os.path.dirname(path) or ".")
-    rolled.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    if batch_id is not None:
-        with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
-            fh.write(str(batch_id))
-    _atomic_swap(path, tmp)
-    return n
+
+    def build(existing: DataFrame | None) -> DataFrame:
+        merged = partials if existing is None else existing.unionByName(partials)
+        return merged.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in value_cols])
+
+    return commit_table(spark, path, build, batch_id)
 
 
 def insert_if_absent(
@@ -141,18 +168,14 @@ def insert_if_absent(
 ) -> int:
     """`ON CONFLICT DO NOTHING` (reference S9): anti-join incoming
     against existing keys, append only the new rows."""
-    if _exists(spark, path):
-        existing = spark.read.parquet(path)
+
+    def build(existing: DataFrame | None) -> DataFrame:
+        if existing is None:
+            return incoming
         new_rows = incoming.join(existing.select(*keys), keys, "left_anti")
-        merged = existing.unionByName(new_rows)
-    else:
-        merged = incoming
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="seed_", dir=os.path.dirname(path) or ".")
-    merged.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    _atomic_swap(path, tmp)
-    return n
+        return existing.unionByName(new_rows)
+
+    return commit_table(spark, path, build)
 
 
 def stream_upsert(

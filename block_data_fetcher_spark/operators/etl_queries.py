@@ -36,7 +36,6 @@ def _raw_blocks(spark: SparkSession) -> DataFrame:
         spark.read.format("solana_rpc")
         .option("start_slot", _SLOTS[0])
         .option("end_slot", _SLOTS[1])
-        .option("mode", "offline")
         .load()
     )
 

@@ -13,10 +13,11 @@ positions; ``latestOffset`` polls the chain head minus a 20-slot
 finality lag — the reference's continuous mode (which its code never
 finished: the loop only logs, ``src/main.rs:144-147``).
 
-Network is OPTIONAL and never on the correctness path: with
-``mode=offline`` (default) the source emits deterministic synthetic
-blocks shaped like `getBlock` JsonParsed responses, so the full
-pipeline (source → extract → classify → upsert) runs hermetically.
+Network is OPTIONAL and never on the correctness path: without a
+``url`` option (the default) the source is offline and emits
+deterministic synthetic blocks shaped like `getBlock` JsonParsed
+responses, so the full pipeline (source → extract → classify →
+upsert) runs hermetically.
 Rows are ``(slot bigint, raw string)`` — exactly the input contract of
 :mod:`..etl.extract`.
 """
@@ -175,33 +176,37 @@ def _with_retry(fn, max_retries: int = MAX_RETRIES,
             sleep(delay_s * attempt)
 
 
-def _fetch_block_rpc(url: str, slot: int, timeout: int = 30):
-    """Network path (gated; never used in tests/correctness runs).
-    Mirrors the reference's getBlock params (src/rpc/mod.rs:64-83)."""
+def _rpc_call(url: str, method: str, params: list, timeout: int = 30):
+    """One JSON-RPC POST; returns the response's ``result``."""
     import urllib.request
 
     payload = json.dumps(
-        {
-            "jsonrpc": "2.0",
-            "id": 1,
-            "method": "getBlock",
-            "params": [
-                slot,
-                {
-                    "encoding": "jsonParsed",
-                    "transactionDetails": "full",
-                    "rewards": True,
-                    "maxSupportedTransactionVersion": 0,
-                },
-            ],
-        }
+        {"jsonrpc": "2.0", "id": 1, "method": method, "params": params}
     ).encode()
     req = urllib.request.Request(
         url, data=payload, headers={"Content-Type": "application/json"}
     )
     with urllib.request.urlopen(req, timeout=timeout) as resp:
-        body = json.load(resp)
-    return body.get("result")
+        return json.load(resp).get("result")
+
+
+def _fetch_block_rpc(url: str, slot: int, timeout: int = 30):
+    """Network path (gated; never used in tests/correctness runs).
+    Mirrors the reference's getBlock params (src/rpc/mod.rs:64-83)."""
+    return _rpc_call(
+        url,
+        "getBlock",
+        [
+            slot,
+            {
+                "encoding": "jsonParsed",
+                "transactionDetails": "full",
+                "rewards": True,
+                "maxSupportedTransactionVersion": 0,
+            },
+        ],
+        timeout,
+    )
 
 
 class _SlotRangePartition(InputPartition):
@@ -210,16 +215,37 @@ class _SlotRangePartition(InputPartition):
         self.end = end
 
 
-class SolanaRpcReader(DataSourceReader):
+class _SlotReader:
+    """Options and per-slot fetch shared by the batch and stream
+    readers. The source is offline exactly when ``url`` is empty."""
+
     def __init__(self, options: dict):
         self.start = int(options.get("start_slot", 0))
-        self.end = int(options.get("end_slot", self.start + 9))
-        self.chunk = int(options.get("batch_size", 10))  # reference cli.rs:34-35
-        self.mode = options.get("mode", "offline")
         self.url = options.get("url", "")
         # reference CLI knobs (src/cli.rs:39-43, defaults :99-100)
         self.max_retries = int(options.get("max_retries", MAX_RETRIES))
         self.retry_delay = float(options.get("retry_delay", RETRY_DELAY_S))
+
+    def _blocks(self, first: int, last: int):
+        """``(slot, raw)`` for each slot in ``[first, last]``."""
+        for slot in range(first, last + 1):
+            if not self.url:
+                yield (slot, synthetic_block(slot))
+                continue
+            result = _with_retry(
+                lambda s=slot: _fetch_block_rpc(self.url, s),
+                self.max_retries,
+                self.retry_delay,
+            )
+            if result is not None:  # skipped/absent slot → log-and-skip (ST5)
+                yield (slot, json.dumps(result))
+
+
+class SolanaRpcReader(_SlotReader, DataSourceReader):
+    def __init__(self, options: dict):
+        super().__init__(options)
+        self.end = int(options.get("end_slot", self.start + 9))
+        self.chunk = int(options.get("batch_size", 10))  # reference cli.rs:34-35
 
     def partitions(self):
         return [
@@ -228,74 +254,37 @@ class SolanaRpcReader(DataSourceReader):
         ]
 
     def read(self, partition: _SlotRangePartition):
-        for slot in range(partition.start, partition.end + 1):
-            if self.mode == "offline":
-                yield (slot, synthetic_block(slot))
-            else:
-                result = _with_retry(
-                    lambda s=slot: _fetch_block_rpc(self.url, s),
-                    self.max_retries,
-                    self.retry_delay,
-                )
-                if result is not None:  # skipped/absent slot → log-and-skip (ST5)
-                    yield (slot, json.dumps(result))
+        return self._blocks(partition.start, partition.end)
 
 
-class SolanaRpcStreamReader(SimpleDataSourceStreamReader):
+class SolanaRpcStreamReader(_SlotReader, SimpleDataSourceStreamReader):
     """Offsets are slot cursors: {"slot": next_unprocessed}."""
 
     def __init__(self, options: dict):
-        self.start = int(options.get("start_slot", 0))
-        self.mode = options.get("mode", "offline")
-        self.url = options.get("url", "")
+        super().__init__(options)
         self.max_batch = int(options.get("max_slots_per_trigger", 10))
-        self.max_retries = int(options.get("max_retries", MAX_RETRIES))
-        self.retry_delay = float(options.get("retry_delay", RETRY_DELAY_S))
         self._offline_head = self.start + FINALITY_LAG + 5
 
     def initialOffset(self):
         return {"slot": self.start}
 
     def _latest_final(self) -> int:
-        if self.mode == "offline":
+        if not self.url:
             # offline head advances each poll — a deterministic chain
             self._offline_head += 3
             head = self._offline_head
         else:
-
-            def _get_slot():
-                import urllib.request
-
-                payload = json.dumps(
-                    {"jsonrpc": "2.0", "id": 1, "method": "getSlot", "params": []}
-                ).encode()
-                req = urllib.request.Request(
-                    self.url,
-                    data=payload,
-                    headers={"Content-Type": "application/json"},
-                )
-                with urllib.request.urlopen(req, timeout=30) as resp:
-                    return json.load(resp)["result"]
-
-            head = _with_retry(_get_slot, self.max_retries, self.retry_delay)
+            head = _with_retry(
+                lambda: _rpc_call(self.url, "getSlot", []),
+                self.max_retries,
+                self.retry_delay,
+            )
         return head - FINALITY_LAG
 
     def read(self, start: dict):
         first = start["slot"]
         last = min(self._latest_final(), first + self.max_batch - 1)
-        rows = []
-        for slot in range(first, last + 1):
-            if self.mode == "offline":
-                rows.append((slot, synthetic_block(slot)))
-            else:
-                result = _with_retry(
-                    lambda s=slot: _fetch_block_rpc(self.url, s),
-                    self.max_retries,
-                    self.retry_delay,
-                )
-                if result is not None:
-                    rows.append((slot, json.dumps(result)))
-        return iter(rows), {"slot": max(first, last + 1)}
+        return iter(list(self._blocks(first, last))), {"slot": max(first, last + 1)}
 
 
 class SolanaRpcDataSource(DataSource):

@@ -1292,14 +1292,14 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay safety comes FREE here: HLL register state is the max of
     item hashes, so re-unioning a replayed batch's sketch is a no-op
     (set-union idempotence) — no batch_id ledger needed, unlike the
-    additive merge. The swap reuses the crash-safe rename-aside
-    helper. Final answer = estimates from the stored sketches vs the
-    exact distincts, emitted under the deterministic within-bound
-    contract (HLL state is order- and partitioning-independent, so
-    the booleans are stable)."""
+    additive merge. Each batch goes through the shared crash-safe
+    ``etl.load.commit_table``. Final answer = estimates from the
+    stored sketches vs the exact distincts, emitted under the
+    deterministic within-bound contract (HLL state is order- and
+    partitioning-independent, so the booleans are stable)."""
     import shutil
 
-    from ..etl.load import _atomic_swap
+    from ..etl.load import commit_table
 
     ev = events_stream(spark, sf_dir).select("event_type", "user_id")
     root = _mkdtemp(prefix="stream_hll_")
@@ -1308,21 +1308,20 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
         sk = batch_df.groupBy("event_type").agg(
             F.hll_sketch_agg("user_id", F.lit(14)).alias("sk")
         )
-        if os.path.isdir(path):
-            sk = (
-                sp.read.parquet(path)
-                .select("event_type", "sk")
+
+        def build(existing: DataFrame | None) -> DataFrame:
+            merged = sk if existing is None else (
+                existing.select("event_type", "sk")
                 .unionByName(sk)
                 .groupBy("event_type")
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
-        tmp = path + ".tmp"
-        sk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _atomic_swap(path, tmp)
+            return merged.coalesce(1)
+
+        commit_table(batch_df.sparkSession, path, build)
 
     try:
         q = (

@@ -35,7 +35,6 @@ def _read_range(spark, start, end):
         spark.read.format("solana_rpc")
         .option("start_slot", start)
         .option("end_slot", end)
-        .option("mode", "offline")
         .load()
     )
 
@@ -184,8 +183,8 @@ def test_rpc_online_reader_retries_flaky_transport(monkeypatch):
     monkeypatch.setattr(rpc, "_fetch_block_rpc", flaky_fetch)
     monkeypatch.setattr(rpc, "RETRY_DELAY_S", 0.0)
     reader = rpc.SolanaRpcReader(
-        {"start_slot": "5", "end_slot": "7", "mode": "online",
-         "url": "http://injected", "retry_delay": "0"}
+        {"start_slot": "5", "end_slot": "7", "url": "http://injected",
+         "retry_delay": "0"}
     )
     (part,) = reader.partitions()
     rows = list(reader.read(part))
@@ -224,6 +223,32 @@ def test_insert_if_absent(spark, tmp_path):
     assert rows == {"p1": "Prog1", "p2": "Prog2", "p3": "Prog3"}
 
 
+def test_commit_restores_table_left_aside_by_crash(spark, tmp_path):
+    """A crash between the swap's two renames leaves the live table only
+    at `path.old`; the next commit must merge into it, not drop it."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([("a", 1.0), ("b", 1.0)], "k string, ts double")
+    upsert_parquet(spark, df, path, ["k"], ["ts"])
+    os.replace(path, path + ".old")
+    more = spark.createDataFrame([("c", 2.0)], "k string, ts double")
+    assert upsert_parquet(spark, more, path, ["k"], ["ts"]) == 3
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == ["a", "b", "c"]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_failed_commit_keeps_table_and_removes_temp_dir(spark, tmp_path):
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([("a", 1.0), ("b", 1.0)], "k string, ts double")
+    upsert_parquet(spark, df, path, ["k"], ["ts"])
+    bad = spark.createDataFrame([("c", 2.0)], "k string, ts double").select(
+        "k", F.raise_error(F.lit("injected write failure")).cast("double").alias("ts")
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        upsert_parquet(spark, bad, path, ["k"], ["ts"])
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == ["a", "b"]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
 def test_stream_pipeline_end_to_end(rpc_registered, spark, tmp_path):
     """Continuous mode done right (the reference's loop is a stub):
     RPC stream source → extract → foreachBatch upsert → parquet."""
@@ -231,7 +256,6 @@ def test_stream_pipeline_end_to_end(rpc_registered, spark, tmp_path):
     stream = (
         spark.readStream.format("solana_rpc")
         .option("start_slot", 500)
-        .option("mode", "offline")
         .option("max_slots_per_trigger", 7)
         .load()
     )
@@ -647,7 +671,6 @@ def rpc_stub():
 def _read_online(spark, stub, start, end):
     return (
         spark.read.format("solana_rpc")
-        .option("mode", "online")
         .option("url", stub.url)
         .option("start_slot", start)
         .option("end_slot", end)
@@ -688,7 +711,6 @@ def test_rpc_online_stream_respects_finality_lag(rpc_registered, spark, rpc_stub
     more."""
     stream = (
         spark.readStream.format("solana_rpc")
-        .option("mode", "online")
         .option("url", rpc_stub.url)
         .option("start_slot", 100)
         .option("max_slots_per_trigger", 50)
@@ -714,6 +736,38 @@ def test_rpc_online_stream_respects_finality_lag(rpc_registered, spark, rpc_stub
     )
     assert slots == set(range(100, lagged_head + 1)) - {rpc_stub.NULL_SLOT}
     assert rpc_stub.hits.get("getSlot", 0) >= 1
+
+
+def test_cli_backfill_fetches_each_block_once(spark, rpc_stub, tmp_path):
+    """`cli.run` reads the source once for both the blocks and the
+    transactions table: one getBlock per slot."""
+    from block_data_fetcher_spark.cli import parse_args, run
+
+    slots = range(104, 124)  # 20 slots: NULL_SLOT inside, FLAKY_SLOT outside
+    report = run(parse_args(
+        ["-s", "104", "-n", "20", "-r", rpc_stub.url, "-o", str(tmp_path / "o")]
+    ))
+    assert report["blocks_loaded"] == 19  # the null slot is skipped
+    assert report["transactions_loaded"] == 19 * 4
+    assert {s: rpc_stub.hits.get(s) for s in slots} == {s: 1 for s in slots}
+
+
+def test_cli_forwards_retry_options(spark, rpc_stub, tmp_path):
+    """--max-retries/--retry-delay reach the source: one attempt fails
+    on the flaky slot's first 500; the default three recover from it."""
+    from block_data_fetcher_spark.cli import parse_args, run
+
+    slot = rpc_stub.FLAKY_SLOT
+    argv = ["-s", str(slot), "-n", "1", "-r", rpc_stub.url]
+    with pytest.raises(Exception):
+        run(parse_args(argv + ["-o", str(tmp_path / "a"),
+                               "--max-retries", "1", "--retry-delay", "0"]))
+    assert rpc_stub.hits[slot] == 1
+
+    rpc_stub.hits.clear()
+    report = run(parse_args(argv + ["-o", str(tmp_path / "b")]))
+    assert report["blocks_loaded"] == 1
+    assert rpc_stub.hits[slot] == 2
 
 
 # --------------------------------------------------------------------------
@@ -757,7 +811,6 @@ def test_rpc_live_continuous_soak(rpc_registered, spark):
     start = head0 - 40  # recent, inside every node's retention
     stream = (
         spark.readStream.format("solana_rpc")
-        .option("mode", "online")
         .option("url", _LIVE_RPC)
         .option("start_slot", start)
         .option("max_slots_per_trigger", 5)
